@@ -8,6 +8,7 @@ into a correctness gate.
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -78,7 +79,6 @@ def _stage_events_chunks_duped(spark: SparkSession, sf_dir: str) -> str:
     Built in a temp dir and published atomically — two concurrent
     builders copying into one directory would overwrite each other's
     files and scramble the mtime ordering the replay depends on."""
-    import shutil
     import time
 
     from .sources.staging import publish_dir
@@ -1007,7 +1007,6 @@ def _stage_events_with_flush_sentinels(spark: SparkSession, sf_dir: str) -> str:
     result by their user ids, never by dropping them pre-watermark (a
     pre-watermark filter would stop them advancing the watermark).
     """
-    import shutil
     import time
 
     from .sources.staging import publish_dir
@@ -1240,16 +1239,15 @@ def stream_serving_materialization(spark: SparkSession, sf_dir: str) -> DataFram
     result = streaming_daily_summary(stream, watermark=None)
     table_dir = tempfile.mkdtemp(prefix="spark_graft_serving_") + "/table"
     checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    # Same state-store sizing rationale as run_to_memory_table: tiny state
-    # cardinality (days x event types), 8 partitions.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    # The sink sizes the state store; the checkpoint is never reused, so
+    # it goes once the replay has drained.  The table dir stays: the
+    # returned frame reads it lazily.
     try:
         materialize_stream_to_serving(
             result, table_dir, keys=["event_type", "time"], checkpoint_dir=checkpoint
         )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        shutil.rmtree(checkpoint)
     return spark.read.parquet(table_dir)
 
 
@@ -1838,8 +1836,6 @@ def stream_session_window_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataF
     "multiple topics/regions into one pipeline.",
 )
 def stream_multi_source_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     global _query_counter
     _query_counter += 1
     name = f"stream_union_{_query_counter}"

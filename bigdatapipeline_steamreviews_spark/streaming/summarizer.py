@@ -154,21 +154,27 @@ def _resolve_state_provider(
 ) -> "tuple[bool, bool]":
     """Resolve the state-store flags from ``SPARK_GRAFT_STREAM_STATE``
     (``hdfs`` | ``rocksdb`` | ``rocksdb_changelog``; default ``hdfs``)
-    where the caller left them None — see ``run_to_memory_table``."""
+    where the caller left them None — see ``run_to_memory_table``.
+    Changelog checkpointing on the HDFS-backed provider raises
+    ``ValueError``: it is a RocksDB feature."""
     import os
 
-    if rocksdb_state is not None and changelog_checkpoint is not None:
-        return rocksdb_state, changelog_checkpoint
-    env = os.environ.get("SPARK_GRAFT_STREAM_STATE", "hdfs").lower()
-    if env not in ("hdfs", "rocksdb", "rocksdb_changelog"):
+    if rocksdb_state is None or changelog_checkpoint is None:
+        env = os.environ.get("SPARK_GRAFT_STREAM_STATE", "hdfs").lower()
+        if env not in ("hdfs", "rocksdb", "rocksdb_changelog"):
+            raise ValueError(
+                f"SPARK_GRAFT_STREAM_STATE={env!r}: expected hdfs | rocksdb"
+                " | rocksdb_changelog"
+            )
+        if rocksdb_state is None:
+            rocksdb_state = env.startswith("rocksdb")
+        if changelog_checkpoint is None:
+            changelog_checkpoint = rocksdb_state and env == "rocksdb_changelog"
+    if changelog_checkpoint and not rocksdb_state:
         raise ValueError(
-            f"SPARK_GRAFT_STREAM_STATE={env!r}: expected hdfs | rocksdb"
-            " | rocksdb_changelog"
+            "changelog checkpointing is a RocksDB feature: it needs"
+            " rocksdb_state=True"
         )
-    if rocksdb_state is None:
-        rocksdb_state = env.startswith("rocksdb")
-    if changelog_checkpoint is None:
-        changelog_checkpoint = rocksdb_state and env == "rocksdb_changelog"
     return rocksdb_state, changelog_checkpoint
 
 
@@ -242,7 +248,6 @@ def run_to_memory_table(
     if rocksdb_state:
         spark.conf.set(provider_key, ROCKSDB_PROVIDER)
     if changelog_checkpoint:
-        assert rocksdb_state, "changelog checkpointing is a RocksDB feature"
         spark.conf.set(CHANGELOG_CONF, "true")
     try:
         query = (

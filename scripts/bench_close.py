@@ -100,19 +100,39 @@ def _noisy(samples: list[float]) -> bool:
     return spread > 0.5 and spread > 0.5 * lo
 
 
+def kept_over_gate(steal_map: dict) -> list[str]:
+    """Queries whose kept sample ran in a window over STEAL_GATE; a
+    sample without a steal reading counts as over, since nothing shows
+    its window was clean."""
+    return sorted(n for n, st in steal_map.items() if st is None or st > STEAL_GATE)
+
+
 def gate_artifact(path: str) -> int:
     """Refuse to bless a whole-run bench artifact measured under steal
     (r17 verdict ask #2): a stamp is credible iff its own instrument says
-    the window was clean (run_steal_pct <= STEAL_GATE) OR it was built by
-    a min-over-sessions protocol (this script, or a composite artifact
-    that says so).  Returns a process exit code; prints the reason."""
+    the window was clean (run_steal_pct <= STEAL_GATE), or it says it was
+    built by a min-over-sessions protocol (``min_over_sessions: true``,
+    set by this script and scripts/bench_compose.py) AND none of its kept
+    samples ran over the gate (``kept_over_gate`` is an empty list).
+    Returns a process exit code; prints the reason."""
     with open(path) as f:
         art = json.load(f)
     steal = art.get("run_steal_pct")
-    protocol = art.get("protocol", "")
-    is_composite = "min" in str(protocol) or art.get("n_sessions")
-    if is_composite:
-        print(f"gate: OK ({path}: min-over-sessions protocol artifact)")
+    if art.get("min_over_sessions") is True:
+        over = art.get("kept_over_gate")
+        if not isinstance(over, list):
+            print(
+                f"gate: REFUSED ({path}: min-over-sessions artifact without a "
+                "kept_over_gate list — re-compose it with the current scripts)"
+            )
+            return 1
+        if over:
+            print(
+                f"gate: REFUSED ({path}: {len(over)} queries kept a sample over "
+                f"the {STEAL_GATE}% steal gate: {', '.join(over[:5])})"
+            )
+            return 1
+        print(f"gate: OK ({path}: min-over-sessions, every kept sample <= {STEAL_GATE}% steal)")
         return 0
     if steal is None:
         print(
@@ -200,6 +220,8 @@ def main() -> None:
         f"noisy-spread/steal>{STEAL_GATE}% retry up to {MAX_ATTEMPTS} attempts"
     )
     out["attempts"] = attempts_log
+    out["min_over_sessions"] = True
+    out["kept_over_gate"] = kept_over_gate(steal_map)
     full_path = os.environ.get(
         "SPARK_GRAFT_BENCH_FULL", os.path.join(ROOT, "BENCH_last_full.json")
     )

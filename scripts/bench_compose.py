@@ -8,7 +8,9 @@ Usage: python scripts/bench_compose.py SESSIONS.jsonl [OUT.json]
 Each input line is a full bench.py artifact (the sidecar shape: queries +
 samples + steal).  Output: the same schema with per-query min across
 sessions, per-query steal of the winning session, n_sessions, and the
-session steal range — passes scripts/bench_close.py --gate by protocol.
+session steal range, ``min_over_sessions: true`` and ``kept_over_gate``
+(the queries whose winning session ran over the steal gate) — it passes
+scripts/bench_close.py --gate when that list is empty.
 """
 
 from __future__ import annotations
@@ -20,6 +22,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import build_output, compact_output  # noqa: E402
+from bench_close import kept_over_gate  # noqa: E402
 
 
 def main() -> None:
@@ -63,6 +66,8 @@ def main() -> None:
     if steal:
         out["steal_pct"] = steal
     out["n_sessions"] = len(sessions)
+    out["min_over_sessions"] = True
+    out["kept_over_gate"] = kept_over_gate({n: steal.get(n) for n in per_query})
     run_steals = [
         s.get("run_steal_pct") for s in sessions if s.get("run_steal_pct") is not None
     ]

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import json
 import os
+import sys
 
 from bench import BENCH_QUERIES, STDOUT_BYTE_BUDGET, build_output, compact_output
 
@@ -133,10 +134,7 @@ def test_compact_output_carries_steal_summary_within_budget():
     assert len(json.dumps(slim)) + 1 <= STDOUT_BYTE_BUDGET
 
 
-def test_bench_close_gate_refuses_stolen_whole_run(tmp_path):
-    """scripts/bench_close.py --gate: a whole-run artifact measured over
-    the steal gate is refused as a stamp; a clean run or a
-    min-over-sessions composite passes (r17 verdict ask #2)."""
+def _load_bench_close():
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
@@ -145,6 +143,14 @@ def test_bench_close_gate_refuses_stolen_whole_run(tmp_path):
     )
     bc = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(bc)
+    return bc
+
+
+def test_bench_close_gate_refuses_stolen_whole_run(tmp_path):
+    """scripts/bench_close.py --gate: a whole-run artifact measured over
+    the steal gate is refused as a stamp; a clean run or a
+    min-over-sessions composite passes (r17 verdict ask #2)."""
+    bc = _load_bench_close()
 
     def art(path, payload):
         with open(path, "w") as f:
@@ -154,12 +160,44 @@ def test_bench_close_gate_refuses_stolen_whole_run(tmp_path):
     assert bc.gate_artifact(art(tmp_path / "stolen.json", {"run_steal_pct": 35.5})) == 1
     assert bc.gate_artifact(art(tmp_path / "clean.json", {"run_steal_pct": 1.8})) == 0
     assert bc.gate_artifact(art(tmp_path / "noinstr.json", {"value": 1.0})) == 1
+    composite = {"protocol": "per-query min over 18 sessions", "min_over_sessions": True}
+    assert bc.gate_artifact(art(tmp_path / "composite.json", {**composite, "kept_over_gate": []})) == 0
+    # trust comes from the explicit fields, not from words in the protocol
+    assert bc.gate_artifact(art(tmp_path / "substring.json", {"protocol": composite["protocol"]})) == 1
+    assert bc.gate_artifact(art(tmp_path / "unlisted.json", composite)) == 1
     assert (
-        bc.gate_artifact(
-            art(
-                tmp_path / "composite.json",
-                {"protocol": "per-query min over 18 sessions"},
-            )
-        )
-        == 0
+        bc.gate_artifact(art(tmp_path / "kept_stolen.json", {**composite, "kept_over_gate": ["q1"]}))
+        == 1
     )
+
+
+def test_bench_close_refuses_artifact_whose_attempts_were_all_stolen(tmp_path, monkeypatch):
+    """bench_close keeps the best attempt even when every attempt ran over
+    the steal gate; it records that in ``kept_over_gate``, so --gate
+    refuses the artifact.  A clean attempt passes."""
+    bc = _load_bench_close()
+    name = BENCH_QUERIES[0]
+    monkeypatch.setattr(bc, "ROOT", str(tmp_path))
+    monkeypatch.setattr(bc, "_wait_quiet", lambda: 0.0)
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_FULL", str(tmp_path / "full.json"))
+    monkeypatch.setattr(sys, "argv", ["bench_close.py", name])
+    monkeypatch.setattr(bc, "MAX_ATTEMPTS", 3)
+    # (steal, sample) per attempt: a clean attempt stops the retries
+    for attempts, code in (
+        ([(30.0, 1.2), (40.0, 1.1), (25.0, 1.3)], 1),
+        ([(30.0, 1.2), (1.0, 1.0)], 0),
+    ):
+        it = iter(attempts)
+        calls = []
+
+        def run_one(n, tmp_full, it=it, calls=calls):
+            calls.append(n)
+            steal, sample = next(it)
+            return {"samples": {n: [sample] * 3}, "steal_pct": {n: steal}}
+
+        monkeypatch.setattr(bc, "_run_one", run_one)
+        bc.main()
+        assert len(calls) == len(attempts)
+        with open(tmp_path / "full.json") as f:
+            assert json.load(f)["kept_over_gate"] == ([name] if code else [])
+        assert bc.gate_artifact(str(tmp_path / "full.json")) == code

@@ -689,8 +689,15 @@ def test_state_provider_env_resolution(monkeypatch):
     assert _resolve_state_provider(False, False) == (False, False)
     # an explicit non-rocksdb choice cannot inherit changelog from the env
     assert _resolve_state_provider(False, None) == (False, False)
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE", "bogus")
     import pytest as _pytest
 
+    # changelog checkpointing on the HDFS provider is refused, however the
+    # provider was resolved (a raise, not an assert: python -O strips those)
+    with _pytest.raises(ValueError, match="RocksDB"):
+        _resolve_state_provider(False, True)
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE", "hdfs")
+    with _pytest.raises(ValueError, match="RocksDB"):
+        _resolve_state_provider(None, True)
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE", "bogus")
     with _pytest.raises(ValueError):
         _resolve_state_provider(None, None)
