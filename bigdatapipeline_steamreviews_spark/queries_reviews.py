@@ -273,8 +273,6 @@ def src_pyds_review_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the batch plan are the same logical query.",
 )
 def stream_pyds_review_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from .operators.aggregations import review_daily_summary as _summary
     from .sources.pyds import register_steamreviews_source
     from .streaming.summarizer import run_to_memory_table
@@ -286,14 +284,7 @@ def stream_pyds_review_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load(REVIEWS_FIXTURE)
     )
     result = _summary(stream)
-    ckpt = tempfile.mkdtemp(prefix="pyds_review_ckpt_")
-    return run_to_memory_table(
-        result,
-        "pyds_review_summary",
-        ckpt,
-        output_mode="complete",
-        shuffle_partitions=4,
-    )
+    return run_to_memory_table(result, output_mode="complete", shuffle_partitions=4)
 
 
 MULTILINE_FIXTURE = os.path.join(

@@ -26,13 +26,13 @@ from .sources.tables import load_table
 from .streaming.sessions import streaming_sessionize
 from .streaming.summarizer import (
     events_file_stream,
+    replay_scope,
     run_to_memory_table,
     stage_events_for_replay,
     streaming_daily_summary,
 )
 
 from .sources.staging import STREAM_STAGE_ROOT as _STAGE_ROOT
-_query_counter = 0
 
 
 def _source_fingerprint(sf_dir: str) -> str:
@@ -108,9 +108,6 @@ def _stage_events_chunks_duped(spark: SparkSession, sf_dir: str) -> str:
 def _run_stream(
     spark: SparkSession, sf_dir: str, watermark: str | None, output_mode: str
 ) -> DataFrame:
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_summary_{_query_counter}"
     stage = _stage_events_chunks(spark, sf_dir)
     # 2 files/trigger: still a multi-micro-batch replay (cross-batch state
     # is exercised), but half the per-trigger fixed cost — each trigger
@@ -119,7 +116,6 @@ def _run_stream(
     # (final state is trigger-sizing-independent; profiled 2x faster).
     stream = events_file_stream(spark, stage, max_files_per_trigger=2)
     result = streaming_daily_summary(stream, watermark=watermark)
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
     # State is 150 rows (days x event types), and the r16 profiling pass
     # measured the replay's wall as ~linear in triggers x state partitions
     # (~150 ms per state task per trigger: checkpoint delta write + store
@@ -129,9 +125,7 @@ def _run_stream(
     # run_to_memory_table docstring: size state partitions to state
     # volume, not input volume — at arrival-rate-sized triggers the same
     # rule picks the big number instead).
-    return run_to_memory_table(
-        result, name, checkpoint, output_mode, shuffle_partitions=2
-    )
+    return run_to_memory_table(result, output_mode=output_mode, shuffle_partitions=2)
 
 
 @register(
@@ -180,17 +174,11 @@ def stream_daily_summary_watermarked(spark: SparkSession, sf_dir: str) -> DataFr
     "over the original input — the same oracle as the flagship.",
 )
 def stream_dedup_daily_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_dedup_{_query_counter}"
     stage = _stage_events_chunks_duped(spark, sf_dir)
     stream = events_file_stream(spark, stage, max_files_per_trigger=2)
     deduped = stream.dropDuplicates(["event_id"])
     result = streaming_daily_summary(deduped, watermark=None)
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    return run_to_memory_table(
-        result, name, checkpoint, "complete", shuffle_partitions=8
-    )
+    return run_to_memory_table(result, output_mode="complete", shuffle_partitions=8)
 
 
 @register(
@@ -207,19 +195,13 @@ def stream_dedup_daily_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     "input — the same oracle as the flagship.",
 )
 def stream_dedup_bounded_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_dedup_wm_{_query_counter}"
     stage = _stage_events_chunks_duped(spark, sf_dir)
     stream = events_file_stream(spark, stage, max_files_per_trigger=2)
     deduped = stream.withWatermark("ts", "1 day").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
     result = streaming_daily_summary(deduped, watermark=None)
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    return run_to_memory_table(
-        result, name, checkpoint, "complete", shuffle_partitions=8
-    )
+    return run_to_memory_table(result, output_mode="complete", shuffle_partitions=8)
 
 
 @register(
@@ -273,21 +255,15 @@ WHERE s.session_id < l.m
     "Batch parity is also asserted in tests/test_streaming_sessions.py.",
 )
 def stream_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_sessions_{_query_counter}"
     stage = _stage_events_chunks(spark, sf_dir)
     stream = events_file_stream(spark, stage, max_files_per_trigger=2)
     result = streaming_sessionize(stream, gap_seconds=1800, watermark="30 minutes")
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
     # Unlike the daily-summary aggregates (state = days x event types, 8
     # partitions ample), session state is per-USER — wide enough that the
     # Arrow state function's parallelism dominates the per-partition
     # trigger fixed cost.  Profiled at sf0.1: 16 -> 4.8 s vs 8 -> 6.4 s
     # vs 32 -> 5.1 s (best-of-3 each); state sizing tracks state width.
-    return run_to_memory_table(
-        result, name, checkpoint, "append", shuffle_partitions=16
-    )
+    return run_to_memory_table(result, output_mode="append", shuffle_partitions=16)
 
 
 @register(
@@ -341,9 +317,6 @@ WHERE end_us + 1800000000 <= wm.wm_ms * 1000
     "total_value accumulates in exact integer 1e-8 units on both sides.",
 )
 def stream_session_window_builtin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_sw_builtin_{_query_counter}"
     stage = _stage_events_chunks(spark, sf_dir)
     stream = events_file_stream(spark, stage, max_files_per_trigger=2)
 
@@ -369,12 +342,9 @@ def stream_session_window_builtin(spark: SparkSession, sf_dir: str) -> DataFrame
             (F.col("total_q").cast("double") / F.lit(1e8)).alias("total_value"),
         )
     )
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
     # Same state-sizing logic as the custom sessionizer: per-user session
     # state is wide, 16 partitions (see stream_sessionization).
-    return run_to_memory_table(
-        result, name, checkpoint, "append", shuffle_partitions=16
-    )
+    return run_to_memory_table(result, output_mode="append", shuffle_partitions=16)
 
 
 @register(
@@ -398,9 +368,6 @@ LIMIT 10
     "leaderboard a serving layer reads after every trigger.",
 )
 def stream_topn_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_topn_{_query_counter}"
     from pyspark.sql import functions as F
 
     from .functions.columns import sum_exact
@@ -413,10 +380,7 @@ def stream_topn_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("total_value").desc(), F.col("user_id"))
         .limit(10)
     )
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    return run_to_memory_table(
-        ranked, name, checkpoint, "complete", shuffle_partitions=8
-    )
+    return run_to_memory_table(ranked, output_mode="complete", shuffle_partitions=8)
 
 
 def _stage_document_chunks(spark: SparkSession, sf_dir: str, chunks: int = 2) -> str:
@@ -477,9 +441,6 @@ GROUP BY 1
     "to the curation pipeline's ingest edge.",
 )
 def stream_document_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_doc_ingest_{_query_counter}"
     from pyspark.sql import functions as F
 
     stage = _stage_document_chunks(spark, sf_dir)
@@ -509,10 +470,7 @@ def stream_document_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_copies"),
         )
     )
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    return run_to_memory_table(
-        fresh, name, checkpoint, "complete", shuffle_partitions=8
-    )
+    return run_to_memory_table(fresh, output_mode="complete", shuffle_partitions=8)
 
 
 # Shared CTE block: stages 1-3 of the streaming curation pipeline's
@@ -689,9 +647,6 @@ GROUP BY f.content_hash
     "bounded broadcasts.",
 )
 def stream_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_curation_{_query_counter}"
     from pyspark.sql import functions as F
 
     keys = _curation_lsh_survivors(spark, sf_dir)
@@ -701,10 +656,7 @@ def stream_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_copies"),
         F.min("n_tokens").alias("n_tokens"),
     )
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    return run_to_memory_table(
-        survivors, name, checkpoint, "complete", shuffle_partitions=8
-    )
+    return run_to_memory_table(survivors, output_mode="complete", shuffle_partitions=8)
 
 
 def _staged_semantic_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -851,9 +803,6 @@ GROUP BY f.content_hash
     "queries_streaming.py::_staged_semantic_assignments.",
 )
 def stream_curation_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_curation_sem_{_query_counter}"
     from pyspark.sql import functions as F
 
     from .functions.columns import dot_product
@@ -921,10 +870,7 @@ def stream_curation_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_copies"),
         F.min("n_tokens").alias("n_tokens"),
     )
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    return run_to_memory_table(
-        survivors, name, checkpoint, "complete", shuffle_partitions=8
-    )
+    return run_to_memory_table(survivors, output_mode="complete", shuffle_partitions=8)
 
 
 @register(
@@ -948,9 +894,6 @@ JOIN events p
     "interval join, which is exactly what the oracle checks.",
 )
 def stream_stream_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_ss_join_{_query_counter}"
     stage = _stage_events_chunks(spark, sf_dir)
 
     from pyspark.sql import functions as F
@@ -988,10 +931,7 @@ def stream_stream_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_timestamp("click_ts").alias("click_unix"),
         F.unix_timestamp("purchase_ts").alias("purchase_unix"),
     )
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    return run_to_memory_table(
-        joined, name, checkpoint, "append", shuffle_partitions=8
-    )
+    return run_to_memory_table(joined, output_mode="append", shuffle_partitions=8)
 
 
 def _stage_events_with_flush_sentinels(spark: SparkSession, sf_dir: str) -> str:
@@ -1070,9 +1010,6 @@ WHERE c.event_type = 'click'
     "left join, which is exactly what the oracle checks.",
 )
 def stream_click_abandonment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_abandon_{_query_counter}"
     stage = _stage_events_with_flush_sentinels(spark, sf_dir)
 
     clicks = (
@@ -1108,10 +1045,7 @@ def stream_click_abandonment(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_timestamp("click_ts").alias("click_unix"),
         F.unix_timestamp("purchase_ts").alias("purchase_unix"),
     )
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    table = run_to_memory_table(
-        joined, name, checkpoint, "append", shuffle_partitions=8
-    )
+    table = run_to_memory_table(joined, output_mode="append", shuffle_partitions=8)
     # Sentinels carry impossible negative user ids; real users are >= 0.
     return table.filter(F.col("user_id") >= 0)
 
@@ -1133,17 +1067,11 @@ GROUP BY 1, 2
     "join+groupBy (same no-watermark equivalence as the flagship).",
 )
 def stream_enriched_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_enriched_{_query_counter}"
     stage = _stage_events_chunks(spark, sf_dir)
     stream = events_file_stream(spark, stage, max_files_per_trigger=2)
     dim = load_table(spark, sf_dir, "customer")
     result = segment_daily_summary(stream, dim)
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    return run_to_memory_table(
-        result, name, checkpoint, "complete", shuffle_partitions=8
-    )
+    return run_to_memory_table(result, output_mode="complete", shuffle_partitions=8)
 
 
 @register(
@@ -1162,14 +1090,10 @@ def stream_enriched_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.sketches import hll_finalize, hll_register_table
 
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_hll_{_query_counter}"
     stage = _stage_events_chunks(spark, sf_dir)
     stream = events_file_stream(spark, stage, max_files_per_trigger=2)
     regs = hll_register_table(stream, "user_id", ["event_type"])
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    mem = run_to_memory_table(regs, name, checkpoint, "complete", shuffle_partitions=8)
+    mem = run_to_memory_table(regs, output_mode="complete", shuffle_partitions=8)
     return hll_finalize(mem, ["event_type"])
 
 
@@ -1198,16 +1122,10 @@ def stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.sketches import qsk_quantiles
     from .streaming.qsketch import streaming_qsk_pools
 
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_qsk_{_query_counter}"
     stage = _stage_events_chunks(spark, sf_dir)
     stream = events_file_stream(spark, stage, max_files_per_trigger=2)
     pools_trace = streaming_qsk_pools(stream)
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    mem = run_to_memory_table(
-        pools_trace, name, checkpoint, "update", shuffle_partitions=8
-    )
+    mem = run_to_memory_table(pools_trace, output_mode="update", shuffle_partitions=8)
     # The trace holds every pool version; n_seen is strictly monotone
     # per group, so max(n_seen) selects each group's final state.
     latest = mem.withColumn(
@@ -1232,22 +1150,13 @@ def stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_serving_materialization(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .streaming.serving_sink import materialize_stream_to_serving
 
-    global _query_counter
-    _query_counter += 1
     stage = _stage_events_chunks(spark, sf_dir)
     stream = events_file_stream(spark, stage, max_files_per_trigger=2)
     result = streaming_daily_summary(stream, watermark=None)
     table_dir = tempfile.mkdtemp(prefix="spark_graft_serving_") + "/table"
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    # The sink sizes the state store; the checkpoint is never reused, so
-    # it goes once the replay has drained.  The table dir stays: the
-    # returned frame reads it lazily.
-    try:
-        materialize_stream_to_serving(
-            result, table_dir, keys=["event_type", "time"], checkpoint_dir=checkpoint
-        )
-    finally:
-        shutil.rmtree(checkpoint)
+    # The sink sizes the state store and removes its temp checkpoint; the
+    # table dir stays, because the returned frame reads it lazily.
+    materialize_stream_to_serving(result, table_dir, keys=["event_type", "time"])
     return spark.read.parquet(table_dir)
 
 
@@ -1286,9 +1195,6 @@ def stream_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .streaming.transitions import streaming_transitions
 
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_transitions_{_query_counter}"
     stage = _stage_events_chunks(spark, sf_dir)
     stream = events_file_stream(spark, stage, max_files_per_trigger=2)
     # An untyped (NULL event_type) event is not a state: excluded from
@@ -1298,11 +1204,8 @@ def stream_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     # untyped'.
     stream = stream.filter(F.col("event_type").isNotNull())
     result = streaming_transitions(stream)
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
     # Per-user state rows like sessionization -> same 16-partition sizing.
-    steps = run_to_memory_table(
-        result, name, checkpoint, "append", shuffle_partitions=16
-    )
+    steps = run_to_memory_table(result, output_mode="append", shuffle_partitions=16)
     counts = steps.groupBy("from_state", "to_state").agg(
         F.count(F.lit(1)).alias("n_transitions")
     )
@@ -1343,18 +1246,12 @@ def stream_user_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .streaming.ewma import streaming_ewma
 
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_ewma_{_query_counter}"
     stage = _stage_events_chunks(spark, sf_dir)
     stream = events_file_stream(spark, stage, max_files_per_trigger=2).filter(
         F.col("value").isNotNull()
     )
     result = streaming_ewma(stream)
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    trajectory = run_to_memory_table(
-        result, name, checkpoint, "append", shuffle_partitions=16
-    )
+    trajectory = run_to_memory_table(result, output_mode="append", shuffle_partitions=16)
     last = W.partitionBy("user_id").orderBy(F.col("n_seen").desc())
     return (
         trajectory.withColumn("__rn", F.row_number().over(last))
@@ -1385,9 +1282,6 @@ FULL JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
     "drained output equals the batch FULL JOIN exactly.",
 )
 def stream_click_purchase_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_full_outer_{_query_counter}"
     stage = _stage_events_with_flush_sentinels(spark, sf_dir)
 
     clicks = (
@@ -1423,10 +1317,7 @@ def stream_click_purchase_full_outer(spark: SparkSession, sf_dir: str) -> DataFr
         F.unix_timestamp("click_ts").alias("click_unix"),
         F.unix_timestamp("purchase_ts").alias("purchase_unix"),
     )
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    table = run_to_memory_table(
-        joined, name, checkpoint, "append", shuffle_partitions=8
-    )
+    table = run_to_memory_table(joined, output_mode="append", shuffle_partitions=8)
     # Sentinels carry impossible negative user ids; real users are >= 0.
     return table.filter(F.col("user_id") >= 0)
 
@@ -1455,9 +1346,6 @@ GROUP BY 1
     "sf0.01 — a non-degenerate gate).",
 )
 def stream_orphan_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_orphans_{_query_counter}"
     stage = _stage_events_chunks(spark, sf_dir)
     stream = events_file_stream(spark, stage, max_files_per_trigger=2)
     dim = (
@@ -1476,10 +1364,7 @@ def stream_orphan_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_orphans"),
         sum_exact("value").alias("orphan_value"),
     ).select(F.col("w.end").alias("time"), "n_orphans", "orphan_value")
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    return run_to_memory_table(
-        result, name, checkpoint, "complete", shuffle_partitions=8
-    )
+    return run_to_memory_table(result, output_mode="complete", shuffle_partitions=8)
 
 
 # ---------------------------------------------------------------------------
@@ -1524,9 +1409,6 @@ GROUP BY event_type, time
     "is a knob, not a necessity, at any scale.",
 )
 def stream_sliding_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_sliding_{_query_counter}"
     stage = _stage_events_chunks(spark, sf_dir)
     stream = events_file_stream(spark, stage, max_files_per_trigger=2)
     result = (
@@ -1544,10 +1426,7 @@ def stream_sliding_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("__tv").cast("string").cast("double").alias("total_value"),
         )
     )
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    return run_to_memory_table(
-        result, name, checkpoint, "complete", shuffle_partitions=8
-    )
+    return run_to_memory_table(result, output_mode="complete", shuffle_partitions=8)
 
 
 # ---------------------------------------------------------------------------
@@ -1593,9 +1472,6 @@ WHERE epoch_ms(time) <= (SELECT epoch_ms(max(ts)) FROM events) - 86400000
     "DECIMAL sums summed again at the second level stay exact.",
 )
 def stream_weekly_from_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_weekly_{_query_counter}"
     stage = _stage_events_chunks(spark, sf_dir)
     stream = events_file_stream(spark, stage, max_files_per_trigger=2)
     daily = (
@@ -1619,10 +1495,7 @@ def stream_weekly_from_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("__tv").cast("string").cast("double").alias("total_value"),
         )
     )
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    return run_to_memory_table(
-        weekly, name, checkpoint, "append", shuffle_partitions=8
-    )
+    return run_to_memory_table(weekly, output_mode="append", shuffle_partitions=8)
 
 
 # ---------------------------------------------------------------------------
@@ -1654,9 +1527,6 @@ ORDER BY event_type
     "Same oracle as the batch query.",
 )
 def stream_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_checksum_{_query_counter}"
     stage = _stage_events_chunks(spark, sf_dir)
     stream = events_file_stream(spark, stage, max_files_per_trigger=2)
     row_hash = events_checksum_row_hash()
@@ -1668,10 +1538,7 @@ def stream_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("bit_xor(__rh)").alias("checksum"),
         )
     )
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    out = run_to_memory_table(
-        result, name, checkpoint, "complete", shuffle_partitions=8
-    )
+    out = run_to_memory_table(result, output_mode="complete", shuffle_partitions=8)
     return out.orderBy("event_type")
 
 
@@ -1704,17 +1571,16 @@ ORDER BY event_type
 def stream_state_inspection(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions.columns import _ACC_DECIMAL, _dec_to_double
 
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_state_inspect_{_query_counter}"
     stage = _stage_events_chunks(spark, sf_dir)
     stream = events_file_stream(spark, stage, max_files_per_trigger=2)
     agg = stream.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.col("value").cast(_ACC_DECIMAL)).alias("total_value"),
     )
+    # The checkpoint is ours, not the runner's: the statestore read below
+    # is lazy and needs the dir after the replay returns.
     ckpt = tempfile.mkdtemp(prefix="spark_graft_state_inspect_")
-    run_to_memory_table(agg, name, ckpt, "complete", shuffle_partitions=8)
+    run_to_memory_table(agg, checkpoint_dir=ckpt, shuffle_partitions=8)
     state = spark.read.format("statestore").load(ckpt)
     # The state row exposes the aggregation BUFFER fields by their internal
     # names: `count` for the count, and `sum` + `isEmpty` for the decimal
@@ -1788,9 +1654,6 @@ def stream_session_window_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataF
     # (a max of us+gap >= us_k) also exceeds end_S — session ends are
     # strictly increasing, hence "us_i > max of ALL previous (us+gap)"
     # is exactly "starts after the current session's horizon".
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_sw_dyngap_{_query_counter}"
     stage = _stage_events_chunks(spark, sf_dir)
     stream = events_file_stream(spark, stage, max_files_per_trigger=2)
 
@@ -1817,10 +1680,7 @@ def stream_session_window_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataF
             (F.col("total_q").cast("double") / F.lit(1e8)).alias("total_value"),
         )
     )
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    return run_to_memory_table(
-        result, name, checkpoint, "append", shuffle_partitions=16
-    )
+    return run_to_memory_table(result, output_mode="append", shuffle_partitions=16)
 
 
 @register(
@@ -1836,9 +1696,6 @@ def stream_session_window_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataF
     "multiple topics/regions into one pipeline.",
 )
 def stream_multi_source_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_union_{_query_counter}"
     base = _stage_events_chunks(spark, sf_dir)
     key = _source_fingerprint(sf_dir)
     split_root = os.path.join(_STAGE_ROOT, f"events_split2_{key}_us")
@@ -1868,10 +1725,7 @@ def stream_multi_source_union(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, os.path.join(split_root, "b"), max_files_per_trigger=1
     )
     result = streaming_daily_summary(sa.unionByName(sb), watermark=None)
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    return run_to_memory_table(
-        result, name, checkpoint, "complete", shuffle_partitions=8
-    )
+    return run_to_memory_table(result, output_mode="complete", shuffle_partitions=8)
 
 
 # ---------------------------------------------------------------------------
@@ -2037,9 +1891,6 @@ WHERE (s.session_end_unix + 1800) * 1000 + 1 < wm.wm_ms
 def stream_sessionization_disordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .streaming.sessions import streaming_sessionize_disordered
 
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_sessions_dis_{_query_counter}"
     stage, wm_days = _stage_events_chunks_displaced(spark, sf_dir)
     # 2 files/trigger (round-10, r9 ask #6): the emitted set is
     # watermark-determined — only the FINAL watermark (max ts - delay)
@@ -2055,10 +1906,7 @@ def stream_sessionization_disordered(spark: SparkSession, sf_dir: str) -> DataFr
     result = streaming_sessionize_disordered(
         stream, gap_seconds=1800, watermark=f"{wm_days} days"
     )
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    return run_to_memory_table(
-        result, name, checkpoint, "append", shuffle_partitions=16
-    )
+    return run_to_memory_table(result, output_mode="append", shuffle_partitions=16)
 
 
 @register(
@@ -2101,9 +1949,6 @@ def stream_transitions_disordered(spark: SparkSession, sf_dir: str) -> DataFrame
 
     from .streaming.transitions import streaming_transitions_disordered
 
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_transitions_dis_{_query_counter}"
     stage, wm_days = _stage_events_chunks_displaced(spark, sf_dir)
     # 2 files/trigger: watermark-determined output, hash-identical under
     # any batch decomposition; cross-trigger displacement preserved (see
@@ -2112,10 +1957,7 @@ def stream_transitions_disordered(spark: SparkSession, sf_dir: str) -> DataFrame
         F.col("event_type").isNotNull()
     )
     result = streaming_transitions_disordered(stream, watermark=f"{wm_days} days")
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    steps = run_to_memory_table(
-        result, name, checkpoint, "append", shuffle_partitions=16
-    )
+    steps = run_to_memory_table(result, output_mode="append", shuffle_partitions=16)
     counts = steps.groupBy("from_state", "to_state").agg(
         F.count(F.lit(1)).alias("n_transitions")
     )
@@ -2158,9 +2000,6 @@ def stream_user_ewma_disordered(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .streaming.ewma import streaming_ewma_disordered
 
-    global _query_counter
-    _query_counter += 1
-    name = f"stream_ewma_dis_{_query_counter}"
     stage, wm_days = _stage_events_chunks_displaced(spark, sf_dir)
     # 2 files/trigger: watermark-determined output, hash-identical under
     # any batch decomposition; cross-trigger displacement preserved (see
@@ -2169,10 +2008,7 @@ def stream_user_ewma_disordered(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").isNotNull()
     )
     result = streaming_ewma_disordered(stream, watermark=f"{wm_days} days")
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    trajectory = run_to_memory_table(
-        result, name, checkpoint, "append", shuffle_partitions=16
-    )
+    trajectory = run_to_memory_table(result, output_mode="append", shuffle_partitions=16)
     last = W.partitionBy("user_id").orderBy(F.col("n_seen").desc())
     return (
         trajectory.withColumn("__rn", F.row_number().over(last))
@@ -2293,18 +2129,13 @@ def stream_pyds_serving_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_serving_store_sink,
     )
 
-    global _query_counter
-    _query_counter += 1
     register_serving_store_sink(spark)
     stage = _stage_events_chunks(spark, sf_dir)
     stream = events_file_stream(spark, stage, max_files_per_trigger=2)
     result = streaming_daily_summary(stream, watermark=None)
     store_dir = tempfile.mkdtemp(prefix="spark_graft_pyds_store_")
-    checkpoint = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
+    with replay_scope(spark, shuffle_partitions=8) as checkpoint:
+        (
             result.writeStream.format("servingstore")
             .outputMode("complete")
             .option("path", store_dir)
@@ -2312,8 +2143,6 @@ def stream_pyds_serving_store(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("checkpointLocation", checkpoint)
             .trigger(availableNow=True)
             .start()
+            .awaitTermination()
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return read_serving_store(spark, store_dir)

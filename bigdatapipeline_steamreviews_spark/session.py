@@ -21,10 +21,16 @@ smoke) runs the same, deliberately-tuned session:
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "ensure_parity_conf", "DEFAULT_SHUFFLE_PARTITIONS"]
+__all__ = [
+    "get_spark",
+    "ensure_parity_conf",
+    "conf_scope",
+    "DEFAULT_SHUFFLE_PARTITIONS",
+]
 
 
 def ensure_parity_conf(spark: SparkSession) -> SparkSession:
@@ -50,6 +56,26 @@ def ensure_parity_conf(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.ansi.enabled", "false")
     return spark
+
+
+@contextmanager
+def conf_scope(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` on the session for the body of a ``with`` block.
+
+    On exit each key gets back the value it had before, or is unset if
+    it had none, whether the body returned or raised."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 

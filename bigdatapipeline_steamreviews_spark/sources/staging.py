@@ -368,10 +368,11 @@ _STAGE_SCHEMA_MEMO: dict = {}
 
 
 def read_stage_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Read a published stage directory with a memoized schema.  Keyed on
-    (abspath, dir mtime): publish_dir renames the build into place, which
-    stamps a fresh directory mtime, so a re-published stage (new corpus
-    fingerprint => new path anyway) can never serve a stale schema."""
+    """Read a published stage directory with a memoized schema, keyed on
+    (abspath, dir mtime).  rename(2) keeps the directory's mtime, so the
+    key is fresh because every build writes into a newly created build
+    dir and publish_dir never re-publishes a live path (first writer
+    wins; a new corpus fingerprint means a new path)."""
     try:
         st = os.stat(path)
         key = (os.path.abspath(path), st.st_mtime_ns)

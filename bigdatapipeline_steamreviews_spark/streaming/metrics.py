@@ -138,44 +138,57 @@ def observation_result(obs, exprs: list[Column]) -> dict:
 
 
 class StreamMetricsListener(StreamingQueryListener):
-    """Captures per-micro-batch progress for one named streaming query:
-    observed metrics (from ``df.observe``) and state-operator counters.
+    """Captures per-micro-batch progress (observed metrics from
+    ``df.observe`` and state-operator counters) for the streaming query
+    named ``query_name``, or for every query when it is ``None``.
 
     Listener events arrive on a separate bus thread, AFTER the batch
     they describe — ``awaitTermination()`` returning does not imply the
     final progress event has been delivered.  ``wait_terminated()``
-    blocks on the QueryTerminated event, which the bus delivers after
-    every progress event for that query, making the captured list
-    complete and deterministic."""
+    blocks until every captured query's QueryTerminated event has
+    arrived, which the bus delivers after that query's progress events,
+    so the captured list is then complete and deterministic."""
 
-    def __init__(self, query_name: str):
+    def __init__(self, query_name: str | None = None):
         self.query_name = query_name
         self.progresses: list[dict] = []
-        self._terminated = threading.Event()
+        self._running: set = set()
+        self._started = False
+        self._state = threading.Condition()
+
+    def _captures(self, name) -> bool:
+        return self.query_name is None or name == self.query_name
 
     # -- listener callbacks (bus thread) --------------------------------
     def onQueryStarted(self, event) -> None:  # noqa: D102
-        pass
+        # Delivered before start() returns; terminated events carry no
+        # name, so the ids recorded here say which terminations count.
+        if self._captures(event.name):
+            with self._state:
+                self._running.add(event.id)
+                self._started = True
 
     def onQueryProgress(self, event) -> None:  # noqa: D102
         p = json.loads(event.progress.json)
-        if p.get("name") == self.query_name:
+        if self._captures(p.get("name")):
             self.progresses.append(p)
 
     def onQueryIdle(self, event) -> None:  # noqa: D102
         pass
 
     def onQueryTerminated(self, event) -> None:  # noqa: D102
-        # Terminated events carry no name; the id check would need the
-        # query handle, which races with start() — one listener per
-        # replay (fresh query name per test) keeps this unambiguous.
-        self._terminated.set()
+        with self._state:
+            self._running.discard(event.id)
+            self._state.notify_all()
 
     # -- host-side accessors ---------------------------------------------
     def wait_terminated(self, timeout: float = 120.0) -> bool:
-        """Block until the bus has delivered the terminated event (and
-        therefore every prior progress event for the query)."""
-        return self._terminated.wait(timeout)
+        """Block until the bus has delivered the terminated event of every
+        captured query (and therefore every prior progress event)."""
+        with self._state:
+            return self._state.wait_for(
+                lambda: self._started and not self._running, timeout
+            )
 
     def dropped_by_watermark(self) -> int:
         """Total input rows the watermark filter discarded across all

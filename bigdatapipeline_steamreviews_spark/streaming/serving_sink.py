@@ -47,10 +47,12 @@ import shutil
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import conf_scope
+from .summarizer import replay_scope
+
 __all__ = ["upsert_batch_writer", "materialize_stream_to_serving"]
 
 AQE_CONF = "spark.sql.adaptive.enabled"
-SHUFFLE_PARTITIONS_CONF = "spark.sql.shuffle.partitions"
 
 
 def _merge_upsert(existing: DataFrame | None, batch: DataFrame, keys: list[str]) -> DataFrame:
@@ -86,9 +88,7 @@ def upsert_batch_writer(table_dir: str, keys: list[str]):
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        prev_aqe = spark.conf.get(AQE_CONF)
-        spark.conf.set(AQE_CONF, "true")
-        try:
+        with conf_scope(spark, {AQE_CONF: "true"}):
             existing = None
             if os.path.exists(os.path.join(table_dir, "_SUCCESS")):
                 existing = spark.read.schema(batch.schema).parquet(table_dir)
@@ -98,8 +98,6 @@ def upsert_batch_writer(table_dir: str, keys: list[str]):
             # Iceberg MERGE replaces this dance in production).
             tmp = table_dir + ".staging"
             merged.write.mode("overwrite").parquet(tmp)
-        finally:
-            spark.conf.set(AQE_CONF, prev_aqe)
         final_tmp = table_dir + ".old"
         if os.path.exists(table_dir):
             os.rename(table_dir, final_tmp)
@@ -114,34 +112,30 @@ def materialize_stream_to_serving(
     result: DataFrame,
     table_dir: str,
     keys: list[str],
-    checkpoint_dir: str,
+    checkpoint_dir: str | None = None,
 ):
     """Run an update-mode streaming aggregate into the parquet serving
-    store via foreachBatch (availableNow; returns after draining input).
+    store via foreachBatch (availableNow; returns the finished query).
 
     Update mode emits only changed (window, key) rows per trigger
     (ref summarizer.py:107) — exactly what a keyed merge wants as input.
 
-    The query starts with ``spark.sql.shuffle.partitions`` set to
-    ``defaultParallelism``, so each trigger runs its state tasks in one
-    wave (on 4 cores, 4 tasks instead of the batch default's 32); the
-    caller's value is restored afterwards.  Spark freezes the count into
-    a new checkpoint, and an existing checkpoint keeps the count it was
-    created with.  The merge inside each trigger runs with AQE on (see
-    ``upsert_batch_writer``); the aggregate's state stays outside AQE.
+    The query runs inside ``replay_scope`` with ``defaultParallelism``
+    state partitions and the deployment's state store, and the
+    checkpoint follows the runner's rule: ``None`` means a temp dir
+    removed afterwards; a dir the caller passes (to refresh again
+    later) stays.  The table dir is always the caller's.
     """
     spark = result.sparkSession
-    prev = spark.conf.get(SHUFFLE_PARTITIONS_CONF)
-    spark.conf.set(SHUFFLE_PARTITIONS_CONF, str(spark.sparkContext.defaultParallelism))
-    try:
+    with replay_scope(
+        spark, checkpoint_dir, spark.sparkContext.defaultParallelism
+    ) as checkpoint:
         query = (
             result.writeStream.outputMode("update")
             .foreachBatch(upsert_batch_writer(table_dir, keys))
-            .option("checkpointLocation", checkpoint_dir)
+            .option("checkpointLocation", checkpoint)
             .trigger(availableNow=True)
             .start()
         )
         query.awaitTermination()
-    finally:
-        spark.conf.set(SHUFFLE_PARTITIONS_CONF, prev)
     return query

@@ -22,18 +22,27 @@ pins ``/tmp/spark_checkpoint_sentiment`` (summarizer.py:110).
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+import uuid
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.aggregations import daily_summary
 from ..schemas import EVENT_SCHEMA
+from ..session import conf_scope
 
 __all__ = [
     "events_file_stream",
     "streaming_daily_summary",
     "run_to_memory_table",
+    "replay_scope",
     "stage_events_for_replay",
+    "state_store_confs",
 ]
 
 # File-stream schema for STAGED events: stage_events_for_replay always
@@ -139,137 +148,118 @@ def streaming_daily_summary(
     return daily_summary(events, window_duration)
 
 
+PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
+HDFS_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+)
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
-
-
 CHANGELOG_CONF = (
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
 )
+SHUFFLE_PARTITIONS_CONF = "spark.sql.shuffle.partitions"
+
+# The session confs behind each ``state_store`` value.  Spark freezes the
+# provider into a checkpoint at its first start; a restart keeps it.
+STATE_STORES: dict[str, dict[str, str]] = {
+    "hdfs": {PROVIDER_CONF: HDFS_PROVIDER},
+    "rocksdb": {PROVIDER_CONF: ROCKSDB_PROVIDER, CHANGELOG_CONF: "false"},
+    "rocksdb_changelog": {PROVIDER_CONF: ROCKSDB_PROVIDER, CHANGELOG_CONF: "true"},
+}
 
 
-def _resolve_state_provider(
-    rocksdb_state: bool | None, changelog_checkpoint: bool | None
-) -> "tuple[bool, bool]":
-    """Resolve the state-store flags from ``SPARK_GRAFT_STREAM_STATE``
-    (``hdfs`` | ``rocksdb`` | ``rocksdb_changelog``; default ``hdfs``)
-    where the caller left them None — see ``run_to_memory_table``.
-    Changelog checkpointing on the HDFS-backed provider raises
-    ``ValueError``: it is a RocksDB feature."""
-    import os
+def state_store_confs(state_store: str | None = None) -> dict[str, str]:
+    """The session confs that select ``state_store``.
 
-    if rocksdb_state is None or changelog_checkpoint is None:
-        env = os.environ.get("SPARK_GRAFT_STREAM_STATE", "hdfs").lower()
-        if env not in ("hdfs", "rocksdb", "rocksdb_changelog"):
-            raise ValueError(
-                f"SPARK_GRAFT_STREAM_STATE={env!r}: expected hdfs | rocksdb"
-                " | rocksdb_changelog"
-            )
-        if rocksdb_state is None:
-            rocksdb_state = env.startswith("rocksdb")
-        if changelog_checkpoint is None:
-            changelog_checkpoint = rocksdb_state and env == "rocksdb_changelog"
-    if changelog_checkpoint and not rocksdb_state:
+    ``None`` reads ``SPARK_GRAFT_STREAM_STATE`` (default ``hdfs``): the
+    provider is a deployment setting, not a query property.  An unknown
+    name raises ``ValueError``."""
+    if state_store is None:
+        state_store = os.environ.get("SPARK_GRAFT_STREAM_STATE", "hdfs").lower()
+    if state_store not in STATE_STORES:
         raise ValueError(
-            "changelog checkpointing is a RocksDB feature: it needs"
-            " rocksdb_state=True"
+            f"state store {state_store!r}: expected one of {', '.join(STATE_STORES)}"
         )
-    return rocksdb_state, changelog_checkpoint
+    return dict(STATE_STORES[state_store])
+
+
+@contextmanager
+def replay_scope(
+    spark: SparkSession,
+    checkpoint_dir: str | None = None,
+    shuffle_partitions: int | None = None,
+    state_store: str | None = None,
+):
+    """What one streaming replay runs inside: its checkpoint dir and its
+    session confs (state store, and state partitions when given).
+
+    Yields the checkpoint dir.  With ``checkpoint_dir=None`` it is a new
+    temp dir, removed on exit; a dir the caller passes stays the
+    caller's.  The confs are restored on exit either way."""
+    confs = state_store_confs(state_store)
+    if shuffle_partitions is not None:
+        confs[SHUFFLE_PARTITIONS_CONF] = str(shuffle_partitions)
+    owned = checkpoint_dir is None
+    if owned:
+        checkpoint_dir = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
+    try:
+        with conf_scope(spark, confs):
+            yield checkpoint_dir
+    finally:
+        if owned:
+            shutil.rmtree(checkpoint_dir, ignore_errors=True)
 
 
 def run_to_memory_table(
     result: DataFrame,
-    query_name: str,
-    checkpoint_dir: str,
+    query_name: str | None = None,
+    checkpoint_dir: str | None = None,
     output_mode: str = "complete",
     shuffle_partitions: int | None = None,
-    rocksdb_state: bool | None = None,
-    changelog_checkpoint: bool | None = None,
+    state_store: str | None = None,
 ) -> DataFrame:
-    """Run a streaming aggregate to completion (availableNow) into an
-    in-memory table; returns the final table as a batch DataFrame.
+    """Run a streaming query to completion (availableNow) into a memory
+    sink and return the sink's final table as a batch DataFrame.
 
-    availableNow drains all currently-available input in micro-batches and
-    stops — the deterministic replay used by tests and the driver-facing
-    ``stream_daily_summary`` query.  complete-mode output == the compacted
-    final state (emission traces are trigger-timing-dependent and never
-    asserted; SURVEY.md §5.2).
+    availableNow drains the input available now and stops: the
+    deterministic replay behind the registered ``stream_*`` queries and
+    the tests.  Complete-mode output is the compacted final state.
 
-    ``shuffle_partitions`` sizes the state store: a streaming aggregation
-    runs one state task per shuffle partition EVERY micro-batch, and the
-    count is frozen into the checkpoint at first start.  Size it to state
-    volume (distinct group keys), not to the session's batch default — a
-    small-cardinality aggregate at 32 partitions pays 32 state tasks per
-    trigger for nothing.  Applied around start() and restored after, since
-    it is read from session conf at query start.
+    Ownership: with ``query_name=None`` the runner names the query and
+    drops the sink's temp view before returning (the frame keeps its
+    resolved plan); with ``checkpoint_dir=None`` it uses a temp
+    checkpoint and removes it.  A name or dir the caller passes stays
+    the caller's, so restarts and ``spark.table(name)`` keep working.
 
-    ``rocksdb_state=True`` swaps the state store for RocksDB — the 100 TB
-    option when streaming state (no-watermark aggregates, big dedup key
-    sets) outgrows executor heap: state lives on local SSD with
-    incremental checkpointing, instead of as JVM objects.  Also frozen
-    into the checkpoint at first start, hence set-and-restored here the
-    same way.
-
-    ``changelog_checkpoint=True`` (RocksDB only) switches the provider
-    to CHANGELOG checkpointing: each commit uploads the delta of state
-    changes instead of a full (or incremental-SST) snapshot, and
-    recovery replays changelogs over the last snapshot — the knob that
-    makes a LARGE-state sessionizer restartable at scale, because
-    per-trigger checkpoint cost becomes proportional to the batch's
-    state CHANGES, not the accumulated state size.  Restart-compatible
-    both ways on the same checkpoint (Spark replays whichever files the
-    commit log names — pinned in test_checkpoint_recovery.py).
-
-    Both state-store flags default to the ``SPARK_GRAFT_STREAM_STATE``
-    environment knob (``hdfs`` | ``rocksdb`` | ``rocksdb_changelog``;
-    default ``hdfs``) when the caller does not pass them explicitly —
-    the r17 scale-parameterization rule: the provider is a DEPLOYMENT
-    setting, not a query property.  The local default is measured, not
-    assumed: an in-session alternating A/B on the sessionization replay
-    (3 reps, two of them at 0.2-1.8% hypervisor steal; OPTIMIZATION_
-    r17.md) put RocksDB+changelog at wall parity with the HDFS-backed
-    store (min 5.43 vs 5.52 s, commit-time sum 2.2 vs 2.7 s per run) —
-    at 1,500 fixed-width state rows the store never leaves the
-    in-memory map regime, so the sandbox keeps the simpler provider,
-    while a 100 TB deployment (state >> executor heap) flips the env
-    var and gets changelog checkpointing without touching query code.
+    ``shuffle_partitions`` sets the state partitions: a stateful query
+    runs one state task per partition on every trigger, and the count is
+    frozen into the checkpoint at first start, so size it to the state
+    (distinct keys), not to the input.  ``state_store`` is ``hdfs`` |
+    ``rocksdb`` | ``rocksdb_changelog``, or ``None`` for the deployment
+    default (``state_store_confs``).  RocksDB keeps state that outgrows
+    executor heap on local disk; changelog checkpointing makes each
+    commit cost the batch's state changes instead of the state size.
+    Measured locally at wall parity with HDFS (OPTIMIZATION_r17.md), so
+    ``hdfs`` stays the default.  Both settings apply only while the
+    query runs.
     """
-    rocksdb_state, changelog_checkpoint = _resolve_state_provider(
-        rocksdb_state, changelog_checkpoint
-    )
     spark = result.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(provider_key, None)
-    prev_changelog = spark.conf.get(CHANGELOG_CONF, None)
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    if rocksdb_state:
-        spark.conf.set(provider_key, ROCKSDB_PROVIDER)
-    if changelog_checkpoint:
-        spark.conf.set(CHANGELOG_CONF, "true")
+    name = query_name or f"spark_graft_replay_{uuid.uuid4().hex}"
     try:
-        query = (
-            result.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
+        with replay_scope(
+            spark, checkpoint_dir, shuffle_partitions, state_store
+        ) as checkpoint:
+            query = (
+                result.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode)
+                .option("checkpointLocation", checkpoint)
+                .trigger(availableNow=True)
+                .start()
+            )
+            query.awaitTermination()
+        return spark.table(name)
     finally:
-        if shuffle_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if rocksdb_state:
-            if prev_provider is None:
-                spark.conf.unset(provider_key)
-            else:
-                spark.conf.set(provider_key, prev_provider)
-        if changelog_checkpoint:
-            if prev_changelog is None:
-                spark.conf.unset(CHANGELOG_CONF)
-            else:
-                spark.conf.set(CHANGELOG_CONF, prev_changelog)
-    return spark.table(query_name)
+        if query_name is None:
+            spark.catalog.dropTempView(name)

@@ -39,7 +39,9 @@ def main() -> None:
     per_query: dict[str, float] = {}
     samples: dict[str, list] = {}
     steal: dict[str, float] = {}
-    names = list(sessions[-1]["queries"])
+    # The universe is every query any session timed: a query that failed
+    # in the last session keeps its best time from the earlier ones.
+    names = list(dict.fromkeys(n for s in sessions for n in s.get("queries", {})))
     for name in names:
         best = None
         for s in sessions:

@@ -46,9 +46,6 @@ _VOLATILE = [
     # counter (lambda x_2 / lambda x_35 for the same plan), so any query
     # planned earlier in the process shifts them — normalize the ordinal.
     (re.compile(r"lambda ([A-Za-z]+)_\d+"), r"lambda \1_n"),
-    # Streaming-born memory tables carry a per-session counter in the
-    # table name (x3_incr_index_3) — same plan, different ordinal.
-    (re.compile(r"x3_incr_index_\d+"), "x3_incr_index_n"),
 ]
 
 def normalize(plan: str) -> str:

@@ -1,12 +1,13 @@
 #!/usr/bin/env python
 """Per-trigger cost profile for the streaming replays (r17 verdict ask #1).
 
-Runs a registered streaming query's EXACT pipeline construction but keeps
-the StreamingQuery handle, so each micro-batch's ``StreamingQueryProgress``
-is captured: durationMs breakdown (addBatch / getBatch / latestOffset /
+Runs a streaming pipeline (a registered ``stream_*`` query, or a bare
+sessionizer / daily summary with its knobs exposed) through the engine's
+own runner and captures each micro-batch's ``StreamingQueryProgress``: durationMs breakdown (addBatch / getBatch / latestOffset /
 queryPlanning / walCommit / commitOffsets / triggerExecution) and
 stateOperators commit times — the instrument the wall-clock bench cannot
-provide (run_to_memory_table returns only the final table).
+provide (run_to_memory_table returns only the final table); a
+``StreamMetricsListener`` collects the progress events.
 
 Variants (A/B'd back-to-back in ONE session per the host-steal protocol —
 memory/host-steal-bench-protocol.md):
@@ -18,6 +19,9 @@ memory/host-steal-bench-protocol.md):
 Usage:
   python scripts/stream_profile.py sessionization --reps 3 \
       --variants hdfs,rocksdb,rocksdb_changelog
+  python scripts/stream_profile.py sessionization --files-per-trigger 4 \
+      --variants hdfs,rocksdb,rocksdb_changelog   # provider x trigger grid
+  python scripts/stream_profile.py stream_sessionization --reps 3
 """
 
 from __future__ import annotations
@@ -26,7 +30,6 @@ import argparse
 import json
 import os
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -39,15 +42,16 @@ from bigdatapipeline_steamreviews_spark.streaming.sessions import (  # noqa: E40
     streaming_sessionize,
     streaming_sessionize_disordered,
 )
+from bigdatapipeline_steamreviews_spark.streaming.metrics import (  # noqa: E402
+    StreamMetricsListener,
+)
 from bigdatapipeline_steamreviews_spark.streaming.summarizer import (  # noqa: E402
-    CHANGELOG_CONF,
-    ROCKSDB_PROVIDER,
     events_file_stream,
+    run_to_memory_table,
     streaming_daily_summary,
 )
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
 
 
 def _steal_ticks():
@@ -73,49 +77,30 @@ def build(spark, which: str, files_per_trigger: int):
     raise SystemExit(f"unknown target {which}")
 
 
-def run_one(spark, which, variant, parts, files_per_trigger, tag):
-    result, mode = build(spark, which, files_per_trigger)
-    ckpt = tempfile.mkdtemp(prefix="spark_graft_prof_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_prov = spark.conf.get(PROVIDER_KEY, None)
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    if variant.startswith("rocksdb"):
-        spark.conf.set(PROVIDER_KEY, ROCKSDB_PROVIDER)
-        spark.conf.set(
-            CHANGELOG_CONF, "true" if variant == "rocksdb_changelog" else "false"
-        )
-    b0, s0 = _steal_ticks()
-    t0 = time.time()
-    q = (
-        result.writeStream.format("memory")
-        .queryName(tag)
-        .outputMode(mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    wall = time.time() - t0
-    b1, s1 = _steal_ticks()
-    prog = [json.loads(p.json) for p in q.recentProgress]
-    spark.conf.set("spark.sql.shuffle.partitions", prev)
-    if variant.startswith("rocksdb"):
-        if prev_prov is None:
-            spark.conf.unset(PROVIDER_KEY)
-        else:
-            spark.conf.set(PROVIDER_KEY, prev_prov)
-        spark.conf.unset(CHANGELOG_CONF)
-    n_rows = spark.table(tag).count()
-    spark.catalog.dropTempView(tag)
+def profile(spark, run) -> dict:
+    """Time ``run()`` and keep the per-trigger progress of every streaming
+    query it starts; a DataFrame that ``run()`` returns is counted after
+    the clock stops."""
+    listener = StreamMetricsListener()
+    spark.streams.addListener(listener)
+    try:
+        b0, s0 = _steal_ticks()
+        t0 = time.time()
+        out = run()
+        wall = time.time() - t0
+        b1, s1 = _steal_ticks()
+        listener.wait_terminated()
+        n_rows = out.count() if out is not None else None
+    finally:
+        spark.streams.removeListener(listener)
     batches = []
-    for p in prog:
-        d = p.get("durationMs", {})
+    for p in listener.progresses:
         so = p.get("stateOperators", [])
         batches.append(
             {
                 "batchId": p.get("batchId"),
                 "numInputRows": p.get("numInputRows"),
-                "durationMs": d,
+                "durationMs": p.get("durationMs", {}),
                 "stateCommitMs": [s.get("commitTimeMs") for s in so],
                 "stateRowsUpdated": [s.get("numRowsUpdated") for s in so],
             }
@@ -129,70 +114,26 @@ def run_one(spark, which, variant, parts, files_per_trigger, tag):
     }
 
 
-def run_registered(spark, qname: str, tag: str):
-    """Run ANY registered stream_* query exactly as the bench does, but
-    intercept run_to_memory_table so the StreamingQueryProgress events are
-    captured (the wall-clock bench cannot see per-trigger durations)."""
-    import bigdatapipeline_steamreviews_spark.queries_streaming as qs
+def run_one(spark, which, variant, parts, files_per_trigger):
+    result, mode = build(spark, which, files_per_trigger)
+    return profile(
+        spark,
+        lambda: run_to_memory_table(
+            result, output_mode=mode, shuffle_partitions=parts, state_store=variant
+        ),
+    )
+
+
+def run_registered(spark, qname: str):
+    """Run ANY registered stream_* query exactly as the bench does (the
+    engine's runner, the deployment's state store) with its per-trigger
+    progress captured."""
     from bigdatapipeline_steamreviews_spark.registry import REGISTRY
 
-    captured = {}
-    real = qs.run_to_memory_table
+    def run():
+        REGISTRY[qname].fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
 
-    def wrapper(result, query_name, checkpoint_dir, output_mode="complete",
-                shuffle_partitions=None, **kw):
-        from bigdatapipeline_steamreviews_spark.streaming import summarizer
-
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        if shuffle_partitions is not None:
-            spark.conf.set(
-                "spark.sql.shuffle.partitions", str(shuffle_partitions)
-            )
-        try:
-            q = (
-                result.writeStream.format("memory")
-                .queryName(query_name)
-                .outputMode(output_mode)
-                .option("checkpointLocation", checkpoint_dir)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            captured.setdefault("progress", []).extend(
-                json.loads(p.json) for p in q.recentProgress
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-        return spark.table(query_name)
-
-    qs.run_to_memory_table = wrapper
-    try:
-        b0, s0 = _steal_ticks()
-        t0 = time.time()
-        df = REGISTRY[qname].fn(spark, SF_DIR)
-        df.write.format("noop").mode("overwrite").save()
-        wall = time.time() - t0
-        b1, s1 = _steal_ticks()
-    finally:
-        qs.run_to_memory_table = real
-    batches = []
-    for p in captured.get("progress", []):
-        d = p.get("durationMs", {})
-        so = p.get("stateOperators", [])
-        batches.append(
-            {
-                "batchId": p.get("batchId"),
-                "numInputRows": p.get("numInputRows"),
-                "durationMs": d,
-                "stateCommitMs": [s.get("commitTimeMs") for s in so],
-            }
-        )
-    return {
-        "wall_s": round(wall, 3),
-        "steal_pct": round(100.0 * (s1 - s0) / max(b1 - b0, 1), 1),
-        "n_batches": len(batches),
-        "batches": batches,
-    }
+    return profile(spark, run)
 
 
 def main():
@@ -211,7 +152,7 @@ def main():
         out = {"target": args.target, "runs": []}
         for rep in range(args.reps):
             spark.catalog.clearCache()
-            r = run_registered(spark, args.target, f"prof_{rep}")
+            r = run_registered(spark, args.target)
             r["rep"] = rep
             out["runs"].append(r)
             print(
@@ -240,17 +181,12 @@ def main():
     parts = args.parts or default_parts[args.target]
     variants = args.variants.split(",")
     out = {"target": args.target, "parts": parts, "fpt": args.files_per_trigger, "runs": []}
-    counter = 0
     # warmup (untimed): spin executors/codegen
-    run_one(spark, args.target, "hdfs", parts, args.files_per_trigger, "warmup_prof")
+    run_one(spark, args.target, "hdfs", parts, args.files_per_trigger)
     for rep in range(args.reps):
         for v in variants:  # alternate variants within each rep (steal protocol)
-            counter += 1
             spark.catalog.clearCache()
-            r = run_one(
-                spark, args.target, v, parts, args.files_per_trigger,
-                f"prof_{counter}",
-            )
+            r = run_one(spark, args.target, v, parts, args.files_per_trigger)
             r["variant"] = v
             r["rep"] = rep
             out["runs"].append(r)

@@ -201,3 +201,29 @@ def test_bench_close_refuses_artifact_whose_attempts_were_all_stolen(tmp_path, m
         with open(tmp_path / "full.json") as f:
             assert json.load(f)["kept_over_gate"] == ([name] if code else [])
         assert bc.gate_artifact(str(tmp_path / "full.json")) == code
+
+
+def test_bench_compose_keeps_queries_missing_from_the_last_session(tmp_path, monkeypatch):
+    """scripts/bench_compose.py takes its query universe from every
+    session: a query the final session did not complete keeps its best
+    time from an earlier one, and the composite counts it."""
+    import importlib
+
+    monkeypatch.syspath_prepend(
+        os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts")
+    )
+    compose = importlib.import_module("bench_compose")
+    sessions = [
+        {"queries": {"q1": 2.0, "q2": 3.0}, "steal_pct": {"q1": 1.0, "q2": 2.0}},
+        {"queries": {"q1": 1.5}, "steal_pct": {"q1": 1.0}},
+    ]
+    src = tmp_path / "sessions.jsonl"
+    src.write_text("".join(json.dumps(s) + "\n" for s in sessions))
+    out_path = tmp_path / "composite.json"
+    monkeypatch.setattr(sys, "argv", ["bench_compose.py", str(src), str(out_path)])
+    compose.main()
+    out = json.loads(out_path.read_text())
+    assert out["queries"] == {"q1": 1.5, "q2": 3.0}
+    assert out["n_queries"] == out["n_completed"] == 2
+    assert out["value"] == 4.5
+    assert out["steal_pct"] == {"q1": 1.0, "q2": 2.0}

@@ -1381,6 +1381,45 @@ def _exact_l2_topk(spark, emb, k=5):
     }
 
 
+def test_residual_probe_join_keys_are_never_null(spark):
+    """ivf_pq_residual_topk joins the coded table to its LUT with
+    ``eqNullSafe`` on list_id (operators/similarity.py, r17), which equals
+    the plain equi-join only while neither side has a null list_id.  Pin
+    it: the staged coded table (codes joined to assignments, as the probe
+    builds it), the inline build's assignments, and the LUT's keys (the
+    centroid table's list_ids, which the coarse probe ranks per query)
+    carry no null list_id, and every coded row's list has a LUT key."""
+    from bigdatapipeline_steamreviews_spark.operators.similarity import (
+        _pq_sliced_corpus,
+        assign_to_centroids,
+        seeded_centroids,
+    )
+    from bigdatapipeline_steamreviews_spark.queries_similarity import (
+        _clean_emb,
+        _staged_residual_index,
+    )
+
+    sf = "/root/testdata/sf0.01"
+    asg, centroids, codes, _ = _staged_residual_index(
+        spark, sf, n_lists=16, n_sub=4, codebook_k=4
+    )
+    coded = codes.join(asg.select("vid", "list_id"), "vid")
+    assert coded.count() == codes.count() > 0
+    assert coded.filter(F.col("list_id").isNull()).count() == 0
+    lut_keys = centroids.select("list_id")
+    assert lut_keys.filter(F.col("list_id").isNull()).count() == 0
+    assert lut_keys.distinct().count() == lut_keys.count() == 16
+    assert coded.join(lut_keys, "list_id", "left_anti").count() == 0
+
+    emb = _clean_emb(spark, sf)
+    e, _, _ = _pq_sliced_corpus(emb, F.lit(False), 4, 64, "vec_id", "embedding")
+    inline = assign_to_centroids(
+        e, seeded_centroids(emb, 16), id_col="vid", vec_col="v",
+        cluster_col="list_id", carry_centroid="__cent",
+    )
+    assert inline.filter(F.col("list_id").isNull()).count() == 0
+
+
 def test_ivf_pq_residual_recall_geq_raw_at_equal_probes(spark):
     """The r14 verdict's acceptance bar: residual encoding must recall at
     least as much of the exact-L2 top-k as the raw-vector encoder at

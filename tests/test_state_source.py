@@ -134,7 +134,7 @@ def test_transform_with_state_running_topk(spark):
         tempfile.mkdtemp(prefix="tws_ckpt_"),
         "append",
         shuffle_partitions=4,
-        rocksdb_state=True,
+        state_store="rocksdb",
     )
     from pyspark.sql import Window as W
 

@@ -5,6 +5,9 @@ traces (those are trigger-timing-dependent).
 
 from __future__ import annotations
 
+import glob
+import json
+import os
 import tempfile
 
 import pytest
@@ -13,6 +16,9 @@ from pyspark.sql import functions as F
 from bigdatapipeline_steamreviews_spark.operators.aggregations import daily_summary
 from bigdatapipeline_steamreviews_spark.sources.tables import load_table
 from bigdatapipeline_steamreviews_spark.streaming.summarizer import (
+    CHANGELOG_CONF,
+    PROVIDER_CONF,
+    ROCKSDB_PROVIDER,
     events_file_stream,
     run_to_memory_table,
     streaming_daily_summary,
@@ -20,6 +26,13 @@ from bigdatapipeline_steamreviews_spark.streaming.summarizer import (
 from tests.conftest import SF_DIR
 
 _qn = 0
+
+
+def _checkpoint_conf(checkpoint: str) -> dict:
+    """The session conf Spark froze into the checkpoint's first offset log
+    entry (line 1 is the version, line 2 the batch metadata)."""
+    with open(os.path.join(checkpoint, "offsets", "0")) as f:
+        return json.loads(f.read().splitlines()[1])["conf"]
 
 
 def _stream_result(spark, stage_dir, watermark=None, output_mode="complete"):
@@ -161,12 +174,14 @@ def test_rocksdb_state_store_matches_batch(spark, tmp_path):
         str(tmp_path / "ckpt"),
         "complete",
         shuffle_partitions=8,
-        rocksdb_state=True,
+        state_store="rocksdb",
     )
     batch = daily_summary(load_table(spark, SF_DIR, "events"))
     assert final.count() == batch.count()
     sym_diff = final.exceptAll(batch).count() + batch.exceptAll(final).count()
     assert sym_diff == 0
+    # the store really was RocksDB: Spark froze it into the checkpoint
+    assert _checkpoint_conf(str(tmp_path / "ckpt"))[PROVIDER_CONF] == ROCKSDB_PROVIDER
 
 
 def test_paced_event_stream_rate_source(spark):
@@ -671,33 +686,114 @@ def test_stream_curation_semantic_stage_bites_on_planted_corpus(spark):
 
 
 def test_state_provider_env_resolution(monkeypatch):
-    """SPARK_GRAFT_STREAM_STATE resolves the state-store flags when the
-    caller leaves them None (r17: the provider is a deployment setting —
-    100 TB flips the env var, query code stays identical); explicit args
-    win, junk values fail loudly."""
+    """``state_store=None`` reads SPARK_GRAFT_STREAM_STATE (r17: the
+    provider is a deployment setting — 100 TB flips the env var, query
+    code stays identical); explicit values win over the env, and junk
+    values fail loudly."""
     from bigdatapipeline_steamreviews_spark.streaming.summarizer import (
-        _resolve_state_provider,
+        HDFS_PROVIDER,
+        state_store_confs,
     )
 
+    hdfs = {PROVIDER_CONF: HDFS_PROVIDER}
+    rocksdb = {PROVIDER_CONF: ROCKSDB_PROVIDER, CHANGELOG_CONF: "false"}
+    changelog = {PROVIDER_CONF: ROCKSDB_PROVIDER, CHANGELOG_CONF: "true"}
     monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE", raising=False)
-    assert _resolve_state_provider(None, None) == (False, False)
+    assert state_store_confs() == hdfs
     monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE", "rocksdb")
-    assert _resolve_state_provider(None, None) == (True, False)
+    assert state_store_confs() == rocksdb
     monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE", "rocksdb_changelog")
-    assert _resolve_state_provider(None, None) == (True, True)
-    # explicit args always win over the env
-    assert _resolve_state_provider(False, False) == (False, False)
-    # an explicit non-rocksdb choice cannot inherit changelog from the env
-    assert _resolve_state_provider(False, None) == (False, False)
-    import pytest as _pytest
-
-    # changelog checkpointing on the HDFS provider is refused, however the
-    # provider was resolved (a raise, not an assert: python -O strips those)
-    with _pytest.raises(ValueError, match="RocksDB"):
-        _resolve_state_provider(False, True)
+    assert state_store_confs() == changelog
+    # explicit values always win over the env
+    assert state_store_confs("hdfs") == hdfs
+    assert state_store_confs("rocksdb") == rocksdb
     monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE", "hdfs")
-    with _pytest.raises(ValueError, match="RocksDB"):
-        _resolve_state_provider(None, True)
+    assert state_store_confs("rocksdb_changelog") == changelog
+    with pytest.raises(ValueError):
+        state_store_confs("bogus")
     monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE", "bogus")
-    with _pytest.raises(ValueError):
-        _resolve_state_provider(None, None)
+    with pytest.raises(ValueError):
+        state_store_confs()
+
+
+# ---------------------------------------------------------------------------
+# Runner ownership: what run_to_memory_table creates, it releases.
+# ---------------------------------------------------------------------------
+
+
+def _temp_views(spark) -> set:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+def _runner_checkpoints() -> set:
+    return set(glob.glob(os.path.join(tempfile.gettempdir(), "spark_graft_ckpt_*")))
+
+
+def test_runner_owned_replay_leaves_nothing_behind(spark, staged_events):
+    """No name and no checkpoint given: the runner drops the sink's temp
+    view and removes its checkpoint, and the returned frame still equals
+    the batch ``daily_summary``."""
+    views, ckpts = _temp_views(spark), _runner_checkpoints()
+    stream = events_file_stream(spark, staged_events, max_files_per_trigger=2)
+    streamed = run_to_memory_table(streaming_daily_summary(stream))
+    assert _temp_views(spark) == views
+    assert _runner_checkpoints() == ckpts
+    batch = daily_summary(load_table(spark, SF_DIR, "events"))
+    key = ("event_type", "time")
+    assert streamed.orderBy(*key).collect() == batch.orderBy(*key).collect()
+
+
+def test_caller_owned_name_and_checkpoint_survive(spark, staged_events, tmp_path):
+    """A name and a checkpoint the caller passes stay the caller's: the
+    sink stays readable by name and the checkpoint dir stays on disk."""
+    ckpt = str(tmp_path / "ckpt")
+    stream = events_file_stream(spark, staged_events, max_files_per_trigger=2)
+    streamed = run_to_memory_table(
+        streaming_daily_summary(stream), "caller_owned_replay", ckpt
+    )
+    try:
+        assert spark.table("caller_owned_replay").count() == streamed.count() > 0
+        assert os.path.isdir(os.path.join(ckpt, "offsets"))
+    finally:
+        spark.catalog.dropTempView("caller_owned_replay")
+
+
+def test_failed_replay_releases_checkpoint_and_confs(spark, staged_events):
+    """A replay that fails at start() (append mode on an aggregate with no
+    watermark) still removes the runner's checkpoint, creates no view, and
+    leaves the caller's confs as they were."""
+    keys = ("spark.sql.shuffle.partitions", PROVIDER_CONF, CHANGELOG_CONF)
+    confs = {k: spark.conf.get(k, None) for k in keys}
+    views, ckpts = _temp_views(spark), _runner_checkpoints()
+    stream = events_file_stream(spark, staged_events)
+    with pytest.raises(Exception, match="(?i)append"):
+        run_to_memory_table(
+            streaming_daily_summary(stream),
+            output_mode="append",
+            shuffle_partitions=3,
+            state_store="rocksdb_changelog",
+        )
+    assert {k: spark.conf.get(k, None) for k in keys} == confs
+    assert _temp_views(spark) == views
+    assert _runner_checkpoints() == ckpts
+
+
+def test_registered_streaming_queries_leak_no_views_or_checkpoints(spark):
+    """One pass over registered queries that replay through the engine's
+    runner (and the two serving sinks) adds no temp view and no
+    ``spark_graft_ckpt_*`` dir, and each returned frame still reads."""
+    from bigdatapipeline_steamreviews_spark import queries
+
+    regs = queries()
+    views, ckpts = _temp_views(spark), _runner_checkpoints()
+    for name in (
+        "stream_daily_summary",
+        "stream_sessionization",
+        "stream_serving_materialization",
+        "stream_pyds_serving_store",
+        "stream_pyds_review_summary",
+        "x3_ivf_pq_incremental",
+    ):
+        regs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+    assert _temp_views(spark) - views == set()
+    assert _runner_checkpoints() - ckpts == set()
